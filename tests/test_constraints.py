@@ -175,31 +175,26 @@ def test_db_constraints_enforced_transactionally(spark, tmp_path):
     assert "constraints" not in _db_manifest(db)["tables"]["a"]
 
 
-def test_constraint_change_conflicts_row_adding_rebase(spark, tmp_path):
-    from amaxa_spark.sources.catalog import (
-        ConcurrentMergeError,
-        delete_from_versioned,
-    )
+def test_constraint_change_conflicts_row_adding_rebase(
+    spark, versioned_layouts
+):
+    from amaxa_spark.sources.catalog import ConcurrentMergeError
 
-    root = str(tmp_path / "t")
-    write_versioned_table(_frame(spark), root, "k", n_buckets=4)
-    t0 = _bucket_manifest(root)["token"]
-    alter_versioned_add_constraint(spark, root, "v_nonneg", "v >= 0")
-    # a merge that validated against the PRE-constraint snapshot must
-    # not rebase past the ALTER — its rows were never checked
-    with pytest.raises(ConcurrentMergeError, match="constraint set"):
-        merge_into_versioned(
-            spark, root, _upd(spark, [(1, 5.0)]), "k", ["v"],
-            base_token=t0,
+    for lay in versioned_layouts:
+        lay.write(_frame(spark), "k", n_buckets=4)
+        t0 = lay.manifest()["token"]
+        lay.add_constraint("v_nonneg", "v >= 0")
+        # a merge that validated against the PRE-constraint snapshot
+        # must not rebase past the ALTER — its rows were never checked
+        with pytest.raises(ConcurrentMergeError, match="constraint set"):
+            lay.merge(_upd(spark, [(1, 5.0)]), "k", ["v"], base_token=t0)
+        # a DELETE from the same stale snapshot rebases freely:
+        # removing rows cannot violate a constraint
+        lay.delete(
+            spark.createDataFrame([(2,)], "k long"), "k", base_token=t0
         )
-    # a DELETE from the same stale snapshot rebases freely: removing
-    # rows cannot violate a constraint
-    delete_from_versioned(
-        spark, root, spark.createDataFrame([(2,)], "k long"), "k",
-        base_token=t0,
-    )
-    got = {r.k for r in read_versioned_table(spark, root).collect()}
-    assert 2 not in got and 1 in got
+        got = {r.k for r in lay.read().collect()}
+        assert 2 not in got and 1 in got, lay
 
 
 def test_db_add_constraint_validates_existing(spark, tmp_path):

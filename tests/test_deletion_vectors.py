@@ -166,28 +166,25 @@ def test_dv_diff_and_cdc_replay(spark, tmp_path):
     assert read_versioned_table(spark, replica).count() == 10
 
 
-def test_dv_conflicts_are_symmetric(spark, tmp_path):
-    root = str(tmp_path / "t")
-    m0 = write_versioned_table(_frame(spark, 12), root, "k", n_buckets=2)
-    delete_from_versioned(spark, root, _keys(spark, 1), "k", mode="dv")
-    # a rewrite whose snapshot predates the DV must not land (it
-    # would resurrect the deleted row)
-    up = spark.createDataFrame([(1, 50.0)], "k long, v double")
-    with pytest.raises(ConcurrentMergeError, match="deletion vector"):
-        merge_into_versioned(
-            spark, root, up, "k", ["v"], base_token=m0["token"]
+def test_dv_conflicts_are_symmetric(spark, versioned_layouts):
+    for lay in versioned_layouts:
+        m0 = lay.write(_frame(spark, 12), "k", n_buckets=2)
+        lay.delete(_keys(spark, 1), "k", mode="dv")
+        # a rewrite whose snapshot predates the DV must not land (it
+        # would resurrect the deleted row)
+        up = spark.createDataFrame([(1, 50.0)], "k long, v double")
+        with pytest.raises(ConcurrentMergeError, match="deletion vector"):
+            lay.merge(up, "k", ["v"], base_token=m0["token"])
+        # and a DV whose snapshot predates a rewrite must not land either
+        mh = lay.manifest()
+        lay.merge(
+            spark.createDataFrame([(2, 9.0)], "k long, v double"),
+            "k", ["v"],
         )
-    # and a DV whose snapshot predates a rewrite must not land either
-    mh = _bucket_manifest(root)
-    merge_into_versioned(
-        spark, root, spark.createDataFrame([(2, 9.0)], "k long, v double"),
-        "k", ["v"],
-    )
-    with pytest.raises(ConcurrentMergeError):
-        delete_from_versioned(
-            spark, root, _keys(spark, 2), "k",
-            mode="dv", base_token=mh["token"],
-        )
+        with pytest.raises(ConcurrentMergeError):
+            lay.delete(
+                _keys(spark, 2), "k", mode="dv", base_token=mh["token"]
+            )
 
 
 def test_dv_vacuum_keeps_referenced_sidecars(spark, tmp_path):

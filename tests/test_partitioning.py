@@ -2093,30 +2093,19 @@ def test_apply_changes_replication(spark, tmp_path):
         apply_changes_versioned(spark, dst, null_type)
 
 
-def test_delete_concurrency_rebase_and_conflict(spark, tmp_path):
+def test_delete_concurrency_rebase_and_conflict(spark, versioned_layouts):
     """The None-drop commit path under contention (simulated
     deterministically by pinning base_token to a stale snapshot): a
     DELETE racing a MERGE to DIFFERENT buckets rebases — both land,
     history stays linear — while overlapping buckets raise, in both
-    orders."""
+    orders. Checked on both storage layouts."""
     import pytest as _pytest
 
-    from amaxa_spark.sources.catalog import (
-        ConcurrentMergeError,
-        delete_from_versioned,
-        merge_into_versioned,
-        read_versioned_table,
-        write_versioned_table,
-    )
+    from amaxa_spark.sources.catalog import ConcurrentMergeError, _bucket_expr
 
-    path = str(tmp_path / "vt_del_race")
     base = spark.range(40).select(
         F.col("id").alias("pk"), F.concat(F.lit("v"), F.col("id")).alias("v")
     )
-    m0 = write_versioned_table(base, path, pk="pk", n_buckets=8)
-
-    from amaxa_spark.sources.catalog import _bucket_expr
-
     # every key's bucket in ONE job, via the layout's own expression
     keys = {
         r.pk: r.b
@@ -2126,50 +2115,49 @@ def test_delete_concurrency_rebase_and_conflict(spark, tmp_path):
     k_other = next(k for k, b in keys.items() if b != keys[k_del])
     k_same = next(k for k in keys if k != k_del and keys[k] == keys[k_del])
 
-    # disjoint race: merge commits after the delete's snapshot; the
-    # delete rebases and BOTH effects land
-    m1 = merge_into_versioned(
-        spark, path,
-        spark.createDataFrame([(k_other, "MERGED")], "pk long, v string"),
-        pk="pk", set_cols=["v"],
-    )
-    m2 = delete_from_versioned(
-        spark, path, spark.createDataFrame([(k_del,)], "pk long"),
-        pk="pk", base_token=m0["token"],
-    )
-    assert int(m2["seq"]) == int(m1["seq"]) + 1
-    rows = {r.pk: r.v for r in read_versioned_table(spark, path).collect()}
-    assert k_del not in rows and rows[k_other] == "MERGED"
+    for lay in versioned_layouts:
+        m0 = lay.write(base, "pk", n_buckets=8)
 
-    # overlapping race, delete loses: the merge rewrote the bucket the
-    # delete also touches -> ConcurrentMergeError
-    m3 = merge_into_versioned(
-        spark, path,
-        spark.createDataFrame([(k_same, "AGAIN")], "pk long, v string"),
-        pk="pk", set_cols=["v"],
-    )
-    with _pytest.raises(ConcurrentMergeError):
-        delete_from_versioned(
-            spark, path, spark.createDataFrame([(k_same,)], "pk long"),
-            pk="pk", base_token=m2["token"],
+        # disjoint race: merge commits after the delete's snapshot;
+        # the delete rebases and BOTH effects land
+        m1 = lay.merge(
+            spark.createDataFrame([(k_other, "MERGED")], "pk long, v string"),
+            "pk", ["v"],
         )
+        m2 = lay.delete(
+            spark.createDataFrame([(k_del,)], "pk long"), "pk",
+            base_token=m0["token"],
+        )
+        assert int(m2["seq"]) == int(m1["seq"]) + 1, lay
+        rows = {r.pk: r.v for r in lay.read().collect()}
+        assert k_del not in rows and rows[k_other] == "MERGED", lay
 
-    # overlapping race, merge loses: a delete DROPPED the bucket the
-    # merge also touches (update-only mode) -> ConcurrentMergeError
-    b_target = keys[k_same]
-    all_in_bucket = [k for k, b in keys.items() if b == b_target]
-    m4 = delete_from_versioned(
-        spark, path,
-        spark.createDataFrame([(k,) for k in all_in_bucket], "pk long"),
-        pk="pk",
-    )
-    assert str(b_target) not in m4["buckets"]
-    with _pytest.raises(ConcurrentMergeError):
-        merge_into_versioned(
-            spark, path,
-            spark.createDataFrame([(k_same, "LOST")], "pk long, v string"),
-            pk="pk", set_cols=["v"], base_token=m3["token"],
+        # overlapping race, delete loses: the merge rewrote the bucket
+        # the delete also touches -> ConcurrentMergeError
+        m3 = lay.merge(
+            spark.createDataFrame([(k_same, "AGAIN")], "pk long, v string"),
+            "pk", ["v"],
         )
+        with _pytest.raises(ConcurrentMergeError):
+            lay.delete(
+                spark.createDataFrame([(k_same,)], "pk long"), "pk",
+                base_token=m2["token"],
+            )
+
+        # overlapping race, merge loses: a delete DROPPED the bucket
+        # the merge also touches (update-only mode) -> ConcurrentMergeError
+        b_target = keys[k_same]
+        all_in_bucket = [k for k, b in keys.items() if b == b_target]
+        m4 = lay.delete(
+            spark.createDataFrame([(k,) for k in all_in_bucket], "pk long"),
+            "pk",
+        )
+        assert str(b_target) not in lay.entry(m4)["buckets"], lay
+        with _pytest.raises(ConcurrentMergeError):
+            lay.merge(
+                spark.createDataFrame([(k_same, "LOST")], "pk long, v string"),
+                "pk", ["v"], base_token=m3["token"],
+            )
 
 
 def test_delete_and_replicate_versioned_db(spark, tmp_path):

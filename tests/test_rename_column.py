@@ -221,21 +221,19 @@ def test_external_sql_and_optimize_after_rename(spark, tmp_path):
     assert "score" not in _physical_names(root)
 
 
-def test_concurrent_rename_conflicts_rewrites(spark, tmp_path):
-    root = str(tmp_path / "t")
-    m0 = write_versioned_table(_frame(spark), root, "k", n_buckets=2)
-    alter_versioned_rename_column(root, "v", "score", spark)
-    # a merge whose snapshot predates the rename must NOT rebase:
-    # its stats/expressions used the old logical namespace
-    up = spark.range(1).select(
-        F.col("id").alias("k"),
-        F.lit(0.0).alias("v"),
-        F.lit("x").alias("name"),
-    )
-    with pytest.raises(ConcurrentMergeError, match="renamed"):
-        merge_into_versioned(
-            spark, root, up, "k", ["v", "name"], base_token=m0["token"]
+def test_concurrent_rename_conflicts_rewrites(spark, versioned_layouts):
+    for lay in versioned_layouts:
+        m0 = lay.write(_frame(spark), "k", n_buckets=2)
+        lay.rename("v", "score")
+        # a merge whose snapshot predates the rename must NOT rebase:
+        # its stats/expressions used the old logical namespace
+        up = spark.range(1).select(
+            F.col("id").alias("k"),
+            F.lit(0.0).alias("v"),
+            F.lit("x").alias("name"),
         )
+        with pytest.raises(ConcurrentMergeError, match="renamed"):
+            lay.merge(up, "k", ["v", "name"], base_token=m0["token"])
 
 
 def test_diff_across_rename_boundary(spark, tmp_path):

@@ -195,17 +195,16 @@ def test_dv_update_constraints_and_null_pk(spark, tmp_path):
         update_versioned(spark, root2, {"v": "0.0"}, mode="dv")
 
 
-def test_dv_update_conflicts_with_racing_rewrite(spark, tmp_path):
-    root = str(tmp_path / "t")
-    write_versioned_table(_frame(spark), root, "k", n_buckets=1)
-    base = _bucket_manifest(root)["token"]
-    # a rewrite lands after the dv-update's snapshot was read
-    update_versioned(spark, root, {"v": "v + 100"}, where="k = 5")
-    with pytest.raises(C.ConcurrentMergeError):
-        update_versioned(
-            spark, root, {"v": "v * 10"}, where="k = 5",
-            mode="dv", base_token=base,
-        )
+def test_dv_update_conflicts_with_racing_rewrite(spark, versioned_layouts):
+    for lay in versioned_layouts:
+        lay.write(_frame(spark), "k", n_buckets=1)
+        base = lay.manifest()["token"]
+        # a rewrite lands after the dv-update's snapshot was read
+        lay.update({"v": "v + 100"}, where="k = 5")
+        with pytest.raises(C.ConcurrentMergeError):
+            lay.update(
+                {"v": "v * 10"}, where="k = 5", mode="dv", base_token=base
+            )
 
 
 def test_vacuum_restore_clone_carry_overlays(spark, tmp_path):
