@@ -39,6 +39,15 @@ def observed_checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
     return out, obs.get
 
 
+def _round_bound(n: int, max_rounds: int) -> int:
+    """Doubling rounds worth running over ``n`` nodes: depth ≤ n, so
+    an acyclic input converges within ceil(log2 n)+1 rounds; only a
+    cycle whose length is not a power of two can still be moving past
+    ceil(log2 n)+2 — stop burning full-table self-joins on it and let
+    the caller's BFS fallback finish."""
+    return min(max_rounds, max(2, (max(n, 2) - 1).bit_length() + 2))
+
+
 def pointer_roots(
     nodes: DataFrame, max_rounds: int = 40
 ) -> tuple[DataFrame, bool]:
@@ -46,7 +55,8 @@ def pointer_roots(
     parent values are null or known-existing node ids. Returns
     ``(ptr_frame(node, ptr), converged)``; when ``converged`` is
     False (a parent cycle, or depth > 2^max_rounds) the pointers are
-    NOT roots and callers must fall back to BFS."""
+    NOT roots and callers must fall back to BFS. Rounds are bounded by
+    :func:`_round_bound`, as in :func:`pointer_seed_hits`."""
     # the hop side is the whole pointer frame: broadcasting it makes
     # each doubling round a map-only stage (no per-round shuffle of
     # ptr), which measurably halves round latency. Gated by row count
@@ -59,7 +69,7 @@ def pointer_roots(
     )
     bcast = int(m["n"]) <= _BROADCAST_HOP_MAX
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(_round_bound(int(m["n"]), max_rounds)):
         hop = ptr.select(F.col("node").alias("__n2"), F.col("ptr").alias("__p2"))
         if bcast:
             hop = F.broadcast(hop)
@@ -131,13 +141,8 @@ def pointer_seed_hits(
     )
     n = int(m["n"])
     bcast = n <= _BROADCAST_HOP_MAX
-    # depth ≤ n, so an acyclic input converges within ceil(log2 n)+1
-    # rounds; only a non-power-of-two cycle can still be moving past
-    # that — stop burning rounds on it and let the caller's BFS
-    # fallback finish
-    max_rounds = min(max_rounds, max(2, (max(n, 2) - 1).bit_length() + 2))
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(_round_bound(n, max_rounds)):
         hop = st.select(
             F.col("node").alias("__n2"),
             F.col("ptr").alias("__p2"),

@@ -958,33 +958,46 @@ def _decode_entry(doc: dict, old) -> dict:
     return out
 
 
-def _encode_delta_commit(manifest: dict, parent: dict) -> dict:
+def _entries(manifest: dict) -> dict:
+    """Layout helper 1 of 2 — where table entries live in a manifest:
+    a db manifest nests them under ``tables`` by name; a single-table
+    manifest IS its one entry, keyed ``None``. Every other function
+    that handles both layouts goes through this map (and
+    :func:`_map_entries`, its write side) and :func:`_table_root`."""
     if manifest.get("kind") == "versioned-db":
-        ptables = parent.get("tables") or {}
-        doc = {k: v for k, v in manifest.items() if k != "tables"}
-        doc["tables"] = {
-            name: _encode_entry(t, ptables.get(name))
-            for name, t in manifest["tables"].items()
-        }
-    else:
-        doc = _encode_entry(manifest, parent)
+        return manifest["tables"]
+    return {None: manifest}
+
+
+def _map_entries(manifest: dict, fn) -> dict:
+    """A copy of ``manifest`` with every table entry replaced by
+    ``fn(name, entry)`` — the write side of :func:`_entries`."""
+    new = {n: fn(n, t) for n, t in _entries(manifest).items()}
+    if None in new:
+        return new[None]
+    return {**manifest, "tables": new}
+
+
+def _table_root(path: str, name: str | None) -> str:
+    """Layout helper 2 of 2 — where a table's files live: ``path``
+    itself for the single-table layout, ``path/<name>`` in a db."""
+    return path if name is None else os.path.join(path, name)
+
+
+def _encode_delta_commit(manifest: dict, parent: dict) -> dict:
+    ptables = _entries(parent)
+    doc = _map_entries(
+        manifest, lambda n, t: _encode_entry(t, ptables.get(n))
+    )
     doc[_DELTA_BASE] = int(parent["seq"])
     return doc
 
 
 def _decode_delta_commit(doc: dict, parent: dict) -> dict:
-    if doc.get("kind") == "versioned-db":
-        ptables = parent.get("tables") or {}
-        out = {
-            k: v for k, v in doc.items() if k not in ("tables", _DELTA_BASE)
-        }
-        out["tables"] = {
-            name: _decode_entry(t, ptables.get(name))
-            for name, t in doc["tables"].items()
-        }
-        return out
-    return _decode_entry(
-        {k: v for k, v in doc.items() if k != _DELTA_BASE}, parent
+    ptables = _entries(parent)
+    return _map_entries(
+        {k: v for k, v in doc.items() if k != _DELTA_BASE},
+        lambda n, t: _decode_entry(t, ptables.get(n)),
     )
 
 
@@ -1144,10 +1157,10 @@ def _claim_next_commit(path: str, manifest: dict) -> tuple[int, int]:
     the read-head / set-seq / claim / retry loop shared by full-rewrite
     commits (:func:`write_versioned_table`) and the stress harness
     (tools/cas_stress.py). Mutates ``manifest["seq"]`` and returns
-    ``(seq, retries)``. `merge_into_versioned` keeps its OWN loop
-    because its retries must first check the intervening commits for
-    bucket conflicts — a semantic this unconditional claim does not
-    have."""
+    ``(seq, retries)``. The DML verbs commit through
+    :func:`_commit_db_update` instead, because their retries must
+    first check the intervening commits for bucket conflicts — a
+    semantic this unconditional claim does not have."""
     retries = 0
     while True:
         head = _commit_chain_head(path)
@@ -1899,7 +1912,7 @@ def _read_maybe_merged(spark: SparkSession, manifest: dict, *paths) -> DataFrame
 # atomically with the data they describe (the Delta/Iceberg
 # manifest-stats idea on the engine's own commit chain). Stats are
 # maintained by EVERY bucket-rewriting commit — merge, delete,
-# CDC-apply, compaction — and _commit_bucket_update purges the entries
+# CDC-apply, compaction — and _commit_db_update purges the entries
 # of any bucket it rewrites before overlaying fresh ones, so a stale
 # stat (which would prune live rows: data loss at read time) is
 # impossible by construction, not by caller discipline.
@@ -2754,18 +2767,19 @@ def _db_harvest_stats(
     path: str,
     gen: str,
     manifest: dict,
-    ours: dict[str, dict],
-) -> dict[str, dict] | None:
-    """Per-table stats harvest for the buckets a db transaction
-    rewrote — the db twin of the per-commit harvest: only tables that
-    opted into ``stats_cols`` pay the (column-pruned, page-cache-hot)
-    aggregation, and only over their own fresh generation."""
-    out: dict[str, dict] = {}
+    ours: dict,
+) -> dict | None:
+    """Per-table stats harvest for the buckets a commit rewrote, on
+    either layout (``ours`` is keyed like the commit loop's maps):
+    only tables that opted into ``stats_cols`` pay the
+    (column-pruned, page-cache-hot) aggregation, and only over their
+    own fresh generation."""
+    out = {}
     for name in ours:
-        t = manifest["tables"][name]
+        t = _entries(manifest)[name]
         if _wants_stats(t):
             out[name] = _harvest_bucket_stats(
-                spark, os.path.join(path, name), gen, t
+                spark, _table_root(path, name), gen, t
             )
     return out or None
 
@@ -4500,96 +4514,31 @@ def merge_into_versioned(
     existing values of the same keys, surviving rebases) — the hook
     the streaming sink uses to pin per-stream progress (exactly-once)
     into the same atomic commit as the data."""
-    import uuid
-
-    if not_matched not in ("ignore", "insert"):
-        raise ValueError(
-            f"not_matched must be 'ignore' or 'insert', got {not_matched!r}"
-        )
     manifest = _bucket_manifest(path, base_token)
-    base_buckets = dict(manifest["buckets"])
-    n_buckets = manifest["n_buckets"]
-    upd = updates.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
-    upd_buckets = _nonnull_update_buckets(upd, pk)
-    affected = (
-        upd_buckets
-        if not_matched == "insert"
-        else [b for b in upd_buckets if str(b) in manifest["buckets"]]
+    _check_table_key(path, manifest, pk, "merge")
+    return _merge_tables(
+        spark, path, manifest, {None: updates}, {None: set_cols},
+        extra_meta, not_matched,
     )
-    if not affected:
-        return _commit_meta_only(path, manifest, extra_meta)
-    cur_paths = [
-        os.path.join(path, manifest["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in affected
-        if str(b) in manifest["buckets"]
-    ]
-    table = _merge_target_frame(
-        spark, path, manifest, cur_paths, upd, pk, set_cols
-    )
-    merged = _apply_matched_updates(table, upd, pk, set_cols)
-    if not_matched == "insert":
-        merged = merged.unionByName(_unmatched_inserts(table, upd, pk, set_cols))
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    (
-        _to_physical(
-            merged.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)),
-            manifest,
+
+
+def _check_table_key(path: str, manifest: dict, pk: str, verb: str) -> None:
+    """A single-table verb's ``pk`` argument must name the table key:
+    rows are bucketed by the manifest's key, so any other column would
+    route them to the wrong buckets."""
+    if pk != manifest["pk"]:
+        raise ValueError(
+            f"{path}: {verb} key {pk!r} is not the table key "
+            f"({manifest['pk']!r})"
         )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(path, gen))
-    )
-    # Deletion vectors break the "affected bucket has >=1 logical row"
-    # invariant: a mode='dv' delete can empty a bucket logically, and a
-    # not_matched='ignore' merge touching it writes NO partition dir for
-    # it — mapping it to `gen` anyway would commit a dangling pointer
-    # (and shed the DV), making every subsequent read PATH_NOT_FOUND.
-    # Mirror _delete_keys_from_table: absent-from-gen buckets map to
-    # None, which _live_buckets drops from the manifest.
-    present = set(_present_buckets(os.path.join(path, gen)))
-    ours = {str(b): (gen if b in present else None) for b in affected}
-    _enforce_constraints(spark, path, manifest, gen)
-    our_stats = (
-        _harvest_bucket_stats(spark, path, gen, manifest)
-        if _wants_stats(manifest)
-        else None
-    )
-    new_manifest = _commit_bucket_update(
-        path, manifest, base_buckets, ours, token, extra_meta,
-        our_stats=our_stats, adds_rows=True,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def _live_buckets(base: dict, ours: dict) -> dict:
     """Overlay rewritten buckets onto a base map; a ``None``
     generation DROPS the bucket (a delete emptied it) — the one
-    None-drop invariant shared by BOTH commit loops."""
+    None-drop invariant of the commit loop."""
     out = {**base, **ours}
     return {b: g for b, g in out.items() if g is not None}
-
-
-def _commit_meta_only(
-    path: str, manifest: dict, extra_meta: dict | None
-) -> dict:
-    """The no-data-change commit rule shared by MERGE, DELETE, and
-    CDC-apply: when nothing touches a bucket but the caller supplied
-    metadata (e.g. a stream's batch marker), that metadata must still
-    commit on the chain — otherwise "the marker rides with the data"
-    breaks for exactly the batches that matched nothing. Without
-    metadata, the head manifest is simply returned."""
-    import uuid
-
-    if extra_meta:
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {},
-            uuid.uuid4().hex[:12], extra_meta,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    return manifest
 
 
 def delete_from_versioned(
@@ -4623,45 +4572,11 @@ def delete_from_versioned(
     DELETE's equality never matches NULL). Concurrency and
     ``extra_meta`` follow the MERGE rules (same CAS commit loop; DV
     and rewrite commits on the same bucket conflict symmetrically)."""
-    import uuid
-
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
     manifest = _bucket_manifest(path, base_token)
-    if pk != manifest["pk"]:
-        raise ValueError(
-            f"{path}: delete key {pk!r} is not the table key "
-            f"({manifest['pk']!r})"
-        )
-    token = uuid.uuid4().hex[:12]
-    if mode == "dv":
-        res = _dv_delete_table_body(
-            spark, path, manifest, keys, f"gen-{token}"
-        )
-        if res is None:
-            return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch = res
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {}, token,
-            extra_meta, ours_dv=ours_dv, ours_patch=ours_patch or None,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    ours = _delete_keys_from_table(spark, path, manifest, keys, f"gen-{token}")
-    if ours is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        # emptied buckets have no dir in the new generation, so they
-        # simply have no harvest row — _carry_bucket_stats drops them
-        our_stats=(
-            _harvest_bucket_stats(spark, path, f"gen-{token}", manifest)
-            if _wants_stats(manifest)
-            else None
-        ),
+    _check_table_key(path, manifest, pk, "delete")
+    return _delete_tables(
+        spark, path, manifest, {None: keys}, extra_meta, mode
     )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def _delete_keys_from_table(
@@ -5154,47 +5069,11 @@ def update_versioned(
     UPDATE OVERLAY sidecar — KB-scale writes for a few-row UPDATE on
     a 100 TB table (:func:`_dv_update_table_body`); OPTIMIZE
     materializes both back to pure files."""
-    import uuid
-
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    manifest = _bucket_manifest(path, base_token)
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    if mode == "dv":
-        res = _dv_update_table_body(
-            spark, path, manifest, set_exprs, where, prune, eq, gen
-        )
-        if res is None:
-            return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch = res
-        # the overlay generation holds every NEW row version — the
-        # same write-side CHECK enforcement as a rewrite commit
-        _enforce_constraints(spark, path, manifest, gen)
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {}, token,
-            extra_meta, adds_rows=True, ours_dv=ours_dv,
-            ours_patch=ours_patch,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    ours = _update_table_body(
-        spark, path, manifest, set_exprs, where, prune, eq, gen
+    spec = {"set": set_exprs, "where": where, "prune": prune, "eq": eq}
+    return _update_tables(
+        spark, path, _bucket_manifest(path, base_token), {None: spec},
+        extra_meta, mode,
     )
-    if ours is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    _enforce_constraints(spark, path, manifest, gen)
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest)
-            if _wants_stats(manifest)
-            else None
-        ),
-        adds_rows=True,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def apply_changes_versioned(
@@ -5220,27 +5099,10 @@ def apply_changes_versioned(
     keys; everything else stays byte-identical. Buckets emptied by
     deletes drop from the manifest. One chain commit — readers never
     observe deletes without the matching upserts."""
-    import uuid
-
-    manifest = _bucket_manifest(path, base_token)
-    token = uuid.uuid4().hex[:12]
-    ours = _apply_changes_to_table(
-        spark, path, manifest, changes, f"gen-{token}"
+    return _apply_changes_tables(
+        spark, path, _bucket_manifest(path, base_token), {None: changes},
+        extra_meta,
     )
-    if ours is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    _enforce_constraints(spark, path, manifest, f"gen-{token}")
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        our_stats=(
-            _harvest_bucket_stats(spark, path, f"gen-{token}", manifest)
-            if _wants_stats(manifest)
-            else None
-        ),
-        adds_rows=True,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def _apply_changes_to_table(
@@ -5469,26 +5331,34 @@ def delete_from_versioned_db(
     DV union, emptied-bucket drop, NULL/absent keys as no-ops) match
     the single-table DELETE, and concurrency follows the
     transactional MERGE rules."""
+    return _delete_tables(
+        spark, path, _db_manifest(path, base_token), keys, extra_meta, mode
+    )
+
+
+def _delete_tables(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    keys: dict,
+    extra_meta: dict | None,
+    mode: str,
+) -> dict:
+    """DELETE on either layout: ``keys`` maps table name (``None`` for
+    a single-table manifest) to its key frame."""
     import uuid
 
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    manifest = _db_manifest(path, base_token)
-    for name in keys:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
+    tables = _check_tables(path, manifest, keys)
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
     if mode == "dv":
-        ours_dv: dict[str, dict] = {}
-        ours_patch: dict[str, dict] = {}
+        ours_dv: dict = {}
+        ours_patch: dict = {}
         for name, keys_df in keys.items():
-            t = manifest["tables"][name]
             res = _dv_delete_table_body(
-                spark, os.path.join(path, name), t, keys_df, gen
+                spark, _table_root(path, name), tables[name], keys_df, gen
             )
             if res is not None:
                 ours_dv[name] = res[0]
@@ -5502,22 +5372,38 @@ def delete_from_versioned_db(
         )
         _publish_manifest(path, new_manifest)
         return new_manifest
-    ours: dict[str, dict] = {}
+    ours: dict = {}
     for name, keys_df in keys.items():
-        t = manifest["tables"][name]
         table_ours = _delete_keys_from_table(
-            spark, os.path.join(path, name), t, keys_df, gen
+            spark, _table_root(path, name), tables[name], keys_df, gen
         )
         if table_ours is not None:
             ours[name] = table_ours
     if not ours:
         return _commit_db_meta_only(path, manifest, extra_meta)
+    # emptied buckets have no dir in the new generation, so they
+    # simply have no harvest row — _carry_bucket_stats drops them
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
         our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
+
+
+def _check_tables(path: str, manifest: dict, names) -> dict:
+    """Validate a transaction's table names against its snapshot
+    BEFORE any generation is written (a typo'd name must not leave
+    earlier tables' files behind as orphans mid-loop); returns the
+    snapshot's table entries."""
+    tables = _entries(manifest)
+    for name in names:
+        if name not in tables:
+            raise ValueError(
+                f"{path}: no table {name!r} in this snapshot "
+                f"(has: {sorted(tables)})"
+            )
+    return tables
 
 
 def update_versioned_db(
@@ -5540,18 +5426,27 @@ def update_versioned_db(
     follows the transactional MERGE rules. ``mode="dv"`` applies the
     merge-on-read path (DV + UPDATE overlay sidecars, no bucket
     rewrites) to every named table, all under one transaction."""
+    return _update_tables(
+        spark, path, _db_manifest(path, base_token), updates, extra_meta, mode
+    )
+
+
+def _update_tables(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    updates: dict,
+    extra_meta: dict | None,
+    mode: str,
+) -> dict:
+    """UPDATE on either layout: ``updates`` maps table name (``None``
+    for a single-table manifest) to its spec dict."""
     import uuid
 
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-
-    manifest = _db_manifest(path, base_token)
+    tables = _check_tables(path, manifest, updates)
     for name, spec in updates.items():
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
         if not isinstance(spec, dict) or "set" not in spec:
             raise ValueError(
                 f"{path}: update spec for {name!r} must be a dict "
@@ -5565,57 +5460,36 @@ def update_versioned_db(
             )
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
+    body = _dv_update_table_body if mode == "dv" else _update_table_body
+    results = {}
+    for name, spec in updates.items():
+        res = body(
+            spark, _table_root(path, name), tables[name], spec["set"],
+            spec.get("where"), spec.get("prune"), spec.get("eq"), gen,
+        )
+        if res is not None:
+            results[name] = res
+    if not results:
+        return _commit_db_meta_only(path, manifest, extra_meta)
+    # the new generation holds every NEW row version (rewritten
+    # buckets, or the dv mode's UPDATE overlays) — write-side CHECK
+    # enforcement before the commit
+    for name in results:
+        _enforce_constraints(
+            spark, _table_root(path, name), tables[name], gen
+        )
     if mode == "dv":
-        ours_dv: dict[str, dict] = {}
-        ours_patch: dict[str, dict] = {}
-        for name, spec in updates.items():
-            t = manifest["tables"][name]
-            res = _dv_update_table_body(
-                spark, os.path.join(path, name), t, spec["set"],
-                spec.get("where"), spec.get("prune"), spec.get("eq"),
-                gen,
-            )
-            if res is not None:
-                ours_dv[name], ours_patch[name] = res
-        if not ours_dv:
-            return _commit_db_meta_only(path, manifest, extra_meta)
-        for name in ours_patch:
-            _enforce_constraints(
-                spark, os.path.join(path, name),
-                manifest["tables"][name], gen,
-            )
         new_manifest = _commit_db_update(
             path, manifest, {}, token, extra_meta, adds_rows=True,
-            ours_dv=ours_dv, ours_patch=ours_patch,
+            ours_dv={n: r[0] for n, r in results.items()},
+            ours_patch={n: r[1] for n, r in results.items()},
         )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    ours: dict[str, dict] = {}
-    for name, spec in updates.items():
-        t = manifest["tables"][name]
-        table_ours = _update_table_body(
-            spark,
-            os.path.join(path, name),
-            t,
-            spec["set"],
-            spec.get("where"),
-            spec.get("prune"),
-            spec.get("eq"),
-            gen,
+    else:
+        new_manifest = _commit_db_update(
+            path, manifest, results, token, extra_meta,
+            our_stats=_db_harvest_stats(spark, path, gen, manifest, results),
+            adds_rows=True,
         )
-        if table_ours is not None:
-            ours[name] = table_ours
-    if not ours:
-        return _commit_db_meta_only(path, manifest, extra_meta)
-    for name in ours:
-        _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
-        )
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
-        adds_rows=True,
-    )
     _publish_manifest(path, new_manifest)
     return new_manifest
 
@@ -5634,22 +5508,29 @@ def apply_changes_versioned_db(
     and ONE chain commit publishes every table's changes together —
     a replica never shows table A's state from a different transaction
     than table B's."""
+    return _apply_changes_tables(
+        spark, path, _db_manifest(path, base_token), changes, extra_meta
+    )
+
+
+def _apply_changes_tables(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    changes: dict,
+    extra_meta: dict | None,
+) -> dict:
+    """CDC-apply on either layout: ``changes`` maps table name
+    (``None`` for a single-table manifest) to its feed."""
     import uuid
 
-    manifest = _db_manifest(path, base_token)
-    for name in changes:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
+    tables = _check_tables(path, manifest, changes)
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
-    ours: dict[str, dict] = {}
+    ours: dict = {}
     for name, ch in changes.items():
-        t = manifest["tables"][name]
         table_ours = _apply_changes_to_table(
-            spark, os.path.join(path, name), t, ch, gen
+            spark, _table_root(path, name), tables[name], ch, gen
         )
         if table_ours is not None:
             ours[name] = table_ours
@@ -5657,7 +5538,7 @@ def apply_changes_versioned_db(
         return _commit_db_meta_only(path, manifest, extra_meta)
     for name in ours:
         _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
+            spark, _table_root(path, name), tables[name], gen
         )
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
@@ -5707,9 +5588,12 @@ def replicate_versioned_db(
 def _commit_db_meta_only(
     path: str, manifest: dict, extra_meta: dict | None
 ) -> dict:
-    """The db twin of :func:`_commit_meta_only`: commit caller
-    metadata as an empty transaction when no bucket changed, else
-    return the head unchanged."""
+    """The no-data-change commit rule of every DML verb on both
+    layouts: when nothing touches a bucket but the caller supplied
+    metadata (e.g. a stream's batch marker), that metadata must still
+    commit on the chain — otherwise "the marker rides with the data"
+    breaks for exactly the batches that matched nothing. Without
+    metadata, the manifest is simply returned."""
     import uuid
 
     if extra_meta:
@@ -5722,8 +5606,8 @@ def _commit_db_meta_only(
 
 
 def _apply_extra_meta(out: dict, extra_meta: dict | None) -> None:
-    """Merge caller metadata into a manifest about to be claimed —
-    shared by BOTH commit loops (single-table and db). extra_meta keys
+    """Merge caller metadata into a manifest about to be claimed by
+    the commit loop (:func:`_commit_db_update`). extra_meta keys
     DEEP-merge over dict values; the "streams" map is additionally
     MONOTONIC per stream — committing a batch marker at or below the
     head's is refused (:class:`StaleStreamBatch`), because blindly
@@ -5745,168 +5629,6 @@ def _apply_extra_meta(out: dict, extra_meta: dict | None) -> None:
             out[k] = {**out[k], **v}
         else:
             out[k] = v
-
-
-def _commit_bucket_update(
-    path: str,
-    base_manifest: dict,
-    base_buckets: dict[str, str],
-    ours: dict[str, str],
-    token: str,
-    extra_meta: dict | None = None,
-    our_stats: dict | None = None,
-    adds_rows: bool = False,
-    ours_dv: dict | None = None,
-    ours_patch: dict | None = None,
-) -> dict:
-    """The single-table CAS commit loop shared by MERGE, UPDATE,
-    OPTIMIZE, DELETE (both modes), and CDC-apply: claim the next seq;
-    on a lost race, rebase when every bucket we rewrote is untouched
-    since our snapshot, raise :class:`ConcurrentMergeError` when any
-    was rewritten (our files came from stale inputs).
-
-    DELETION VECTORS ride the same loop: a rewritten bucket SHEDS its
-    DV entry in the committed manifest (the rewrite read the
-    DV-filtered frame, so the physical shed and the metadata shed are
-    one atomic commit); ``ours_dv`` overlays fresh DV entries for a
-    merge-on-read delete. Both directions conflict symmetrically — a
-    rewrite racing a DV commit on the same bucket would resurrect the
-    deleted rows (its files predate the DV), and a DV commit racing a
-    rewrite may have unioned a superseded DV or suppress a
-    re-inserted key — so any touched bucket whose generation OR DV
-    entry moved since the snapshot raises.
-
-    CONSTRAINT-CHANGE conflicts are detected on the same rebase path:
-    a data writer validated its rows against its SNAPSHOT's CHECK
-    constraints — if the head it is rebasing onto carries a DIFFERENT
-    constraint set (a concurrent ADD CONSTRAINT), those rows were
-    never checked against it, so the commit raises instead of
-    publishing potentially-violating data (the optimistic window
-    Delta leaves open; re-run against the new head to close it).
-    Dropped/relaxed constraints conflict too — cheaper than proving
-    set-wise implication, and an ALTER racing a write is rare. Only
-    ROW-INTRODUCING writers opt in (``adds_rows=True``: MERGE,
-    UPDATE, CDC-apply); DELETE and OPTIMIZE only remove or re-arrange
-    rows that already passed, so they rebase freely.
-
-    An ``ours`` value of ``None`` DROPS that bucket from the manifest
-    (a delete emptied it, :func:`_live_buckets`) — still a touched
-    bucket for conflict detection, but the committed map carries no
-    entry, which is exactly how a zero-bucket init looks."""
-    def stamped(src: dict, seq: int, buckets: dict) -> dict:
-        # carry every manifest field (kind/pk/n_buckets/added_columns/
-        # future metadata) from the newest known state; committed_at is
-        # re-stamped at publish. This runs on the base AND on every
-        # rebase, so the extra_meta merge always checks the exact
-        # manifest being extended.
-        out = {
-            **{k: v for k, v in src.items() if k != "committed_at"},
-            "token": token,
-            "seq": seq,
-            "buckets": buckets,
-        }
-        dv = dict(src.get("dv") or {})
-        patch = dict(src.get("patch") or {})
-        for b in ours:
-            dv.pop(b, None)  # a rewritten bucket sheds its DV
-            patch.pop(b, None)  # ...and its UPDATE overlay
-        if ours_dv:
-            dv.update(ours_dv)
-        if ours_patch:
-            # a None patch entry DROPS the bucket's overlay (a DV
-            # delete erased its last patched row)
-            patch.update(ours_patch)
-            patch = {b: g for b, g in patch.items() if g is not None}
-        if dv:
-            out["dv"] = dv
-        else:
-            out.pop("dv", None)
-        if patch:
-            out["patch"] = patch
-        else:
-            out.pop("patch", None)
-        if "bucket_stats" in src or our_stats:
-            # purge-then-overlay runs per rebase too, against the exact
-            # stats map being extended — a committer that rewrote a
-            # bucket but harvested nothing leaves NO stats for it
-            # (conservative read), never the superseded entry. Buckets
-            # gaining an UPDATE overlay purge too: their base stats
-            # describe superseded values and would prune live rows.
-            out["bucket_stats"] = _carry_bucket_stats(
-                src, set(ours) | set(ours_patch or {}), our_stats, buckets
-            )
-        _apply_extra_meta(out, extra_meta)
-        return out
-
-    seq = int(base_manifest.get("seq", 0)) + 1
-    parent = base_manifest
-    new_manifest = stamped(base_manifest, seq, _live_buckets(base_buckets, ours))
-    while True:
-        try:
-            _claim_commit(path, seq, new_manifest, parent=parent)
-            return new_manifest
-        except FileExistsError:
-            head_seq, head = _commit_chain_head(path)
-            touched = set(ours) | set(ours_dv or {}) | set(ours_patch or {})
-            if any(
-                head["buckets"].get(b) != base_buckets.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: bucket(s) {sorted(touched)} were rewritten by "
-                    f"commit(s) up to seq {head_seq} after this write's "
-                    "snapshot; re-run against the new head"
-                )
-            base_dv = base_manifest.get("dv") or {}
-            if any(
-                (head.get("dv") or {}).get(b) != base_dv.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: deletion vector(s) on bucket(s) "
-                    f"{sorted(touched)} changed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            base_patch = base_manifest.get("patch") or {}
-            if any(
-                (head.get("patch") or {}).get(b) != base_patch.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: UPDATE overlay(s) on bucket(s) "
-                    f"{sorted(touched)} changed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            if adds_rows and ours and head.get("constraints") != base_manifest.get(
-                "constraints"
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: the CHECK constraint set changed (seq up to "
-                    f"{head_seq}) after this write validated its rows "
-                    "against its snapshot's constraints; re-run against "
-                    "the new head"
-                )
-            if ours and head.get("column_map") != base_manifest.get(
-                "column_map"
-            ):
-                # a concurrent RENAME changed the logical namespace:
-                # this write's files carry the right PHYSICAL names
-                # either way, but its harvested stats / evaluated
-                # expressions used the snapshot's logical names —
-                # rebasing would mix two naming generations in one
-                # manifest
-                raise ConcurrentMergeError(
-                    f"{path}: a column was renamed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            # rebase onto the head's metadata too — it may carry newer
-            # ALTER commits than our snapshot
-            seq = head_seq + 1
-            parent = head
-            new_manifest = stamped(head, seq, _live_buckets(head["buckets"], ours))
 
 
 def _mor_fraction(root: str, entry: dict, b: str) -> float | None:
@@ -6133,14 +5855,10 @@ def optimize_versioned(
         }
     else:
         cluster_meta = None
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token,
+    new_manifest = _commit_db_update(
+        path, manifest, {None: ours}, token,
         extra_meta=cluster_meta,
-        our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest)
-            if _wants_stats(manifest)
-            else None
-        ),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, {None: ours}),
     )
     _publish_manifest(path, new_manifest)
     return new_manifest, candidates
@@ -7055,31 +6773,41 @@ def merge_into_versioned_db(
     (committed atomically with the transaction; the streaming sink's
     progress-marker hook, monotonic per stream) mirror the
     single-table MERGE."""
+    return _merge_tables(
+        spark, path, _db_manifest(path, base_token), updates, set_cols,
+        extra_meta, not_matched,
+    )
+
+
+def _merge_tables(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    updates: dict,
+    set_cols: dict,
+    extra_meta: dict | None,
+    not_matched: str,
+) -> dict:
+    """MERGE on either layout: ``updates`` and ``set_cols`` map table
+    name (``None`` for a single-table manifest) to the update frame
+    and its SET columns."""
     import uuid
 
     if not_matched not in ("ignore", "insert"):
         raise ValueError(
             f"not_matched must be 'ignore' or 'insert', got {not_matched!r}"
         )
-    manifest = _db_manifest(path, base_token)
-    # validate the whole transaction BEFORE writing any generation —
-    # a typo'd table name must not leave earlier tables' files behind
-    # as orphans mid-loop
+    tables = _check_tables(path, manifest, updates)
     for name in updates:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
         if name not in set_cols:
             raise ValueError(
                 f"{path}: updates for table {name!r} have no set_cols entry"
             )
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
-    ours: dict[str, dict[str, str]] = {}
+    ours: dict = {}
     for name, upd_df in updates.items():
-        t = manifest["tables"][name]
+        t, root = tables[name], _table_root(path, name)
         pk, nb = t["pk"], t["n_buckets"]
         upd = upd_df.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
         upd_buckets = _nonnull_update_buckets(upd, pk)
@@ -7091,12 +6819,12 @@ def merge_into_versioned_db(
         if not affected:
             continue
         cur = [
-            os.path.join(path, name, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
+            os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
             for b in affected
             if str(b) in t["buckets"]
         ]
         table = _merge_target_frame(
-            spark, os.path.join(path, name), t, cur, upd, pk, set_cols[name]
+            spark, root, t, cur, upd, pk, set_cols[name]
         )
         merged = _apply_matched_updates(table, upd, pk, set_cols[name])
         if not_matched == "insert":
@@ -7109,19 +6837,22 @@ def merge_into_versioned_db(
             )
             .write.mode("errorifexists")
             .partitionBy(MERGE_BUCKET_COL)
-            .parquet(os.path.join(path, name, gen))
+            .parquet(os.path.join(root, gen))
         )
-        # Same DV-emptied-bucket hole as the single-table merge: a
-        # bucket with zero logical rows after a not_matched='ignore'
-        # merge writes no partition dir — None-drop it from the
-        # manifest instead of committing a dangling pointer.
-        present = set(_present_buckets(os.path.join(path, name, gen)))
+        # Deletion vectors break the "affected bucket has >=1 logical
+        # row" invariant: a mode='dv' delete can empty a bucket
+        # logically, and a not_matched='ignore' merge touching it
+        # writes NO partition dir for it — mapping it to `gen` anyway
+        # would commit a dangling pointer (and shed the DV), making
+        # every later read PATH_NOT_FOUND. Absent-from-gen buckets map
+        # to None, which _live_buckets drops from the manifest.
+        present = set(_present_buckets(os.path.join(root, gen)))
         ours[name] = {str(b): (gen if b in present else None) for b in affected}
     if not ours:
         return _commit_db_meta_only(path, manifest, extra_meta)
     for name in ours:
         _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
+            spark, _table_root(path, name), tables[name], gen
         )
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
@@ -7135,59 +6866,85 @@ def merge_into_versioned_db(
 def _commit_db_update(
     path: str,
     base_manifest: dict,
-    ours: dict[str, dict[str, str]],
+    ours: dict,
     token: str,
     extra_meta: dict | None = None,
-    our_stats: dict[str, dict] | None = None,
+    our_stats: dict | None = None,
     adds_rows: bool = False,
-    ours_dv: dict[str, dict] | None = None,
-    ours_patch: dict[str, dict] | None = None,
+    ours_dv: dict | None = None,
+    ours_patch: dict | None = None,
 ) -> dict:
-    """The database-level CAS commit loop shared by transactional
-    MERGE, OPTIMIZE, and DELETE (both modes): claim the next seq; on
-    a lost race, rebase
-    when EVERY table's rewritten buckets are untouched since the
-    snapshot, and raise :class:`ConcurrentMergeError` when any table
-    conflicts or was dropped by an intervening full rewrite (a partial
-    rebase would tear the transaction). ``extra_meta`` deep-merges
-    into the committed manifest with the same monotonic-streams rule
-    as the single-table loop (:func:`_apply_extra_meta`) — checked
-    against the exact manifest being extended, on the base and on
-    every rebase. A ``None`` generation in ``ours`` DROPS that bucket
-    from its table's map (a delete emptied it), with the same
-    conflict-detection standing as a rewrite."""
-    base_tables = {
-        n: dict(t["buckets"]) for n, t in base_manifest["tables"].items()
+    """THE CAS commit loop of both versioned layouts, shared by MERGE,
+    UPDATE, OPTIMIZE, DELETE (both modes) and CDC-apply. Every map is
+    keyed by table: ``ours`` maps a table to ``{bucket: new
+    generation}``, and ``our_stats`` / ``ours_dv`` / ``ours_patch``
+    likewise. A single-table manifest is a one-table database whose
+    table is named ``None`` (:func:`_entries`).
+
+    Claim the next seq; on a lost race, rebase onto the head when
+    EVERY touched table is untouched since our snapshot, and raise
+    :class:`ConcurrentMergeError` when any table conflicts (a partial
+    rebase would tear the transaction). A touched table conflicts
+    when, since the snapshot:
+
+    - an intervening full rewrite dropped it;
+    - any touched bucket's generation, DELETION VECTOR or UPDATE
+      overlay moved. Both directions matter: a rewrite racing a DV
+      commit would resurrect the deleted rows (its files predate the
+      DV), and a DV commit racing a rewrite may have unioned a
+      superseded DV or suppress a re-inserted key;
+    - its CHECK constraint set changed, for ROW-INTRODUCING writers
+      (``adds_rows=True``: MERGE, UPDATE, CDC-apply). Their rows were
+      validated against the snapshot's constraints only — the
+      optimistic window Delta leaves open. Dropped or relaxed
+      constraints conflict too: cheaper than proving implication, and
+      an ALTER racing a write is rare. DELETE and OPTIMIZE only remove
+      or re-arrange rows that already passed, so they rebase freely;
+    - a column was RENAMED: the write's stats and evaluated
+      expressions used the snapshot's logical names, and a rebase
+      would mix two naming generations in one manifest.
+
+    The committed manifest carries every field of the exact manifest
+    it extends (the base, or the head on each rebase — it may carry
+    newer ALTER commits). In each touched table a rewritten bucket
+    SHEDS its DV and overlay entries (the rewrite read the filtered
+    frame, so the physical and metadata shed are one atomic commit),
+    ``ours_dv`` / ``ours_patch`` entries overlay fresh sidecars (a
+    ``None`` patch drops the bucket's overlay), and a ``None``
+    generation in ``ours`` DROPS the bucket (a delete emptied it) —
+    still a touched bucket for conflict detection. ``extra_meta``
+    deep-merges with the monotonic-streams rule
+    (:func:`_apply_extra_meta`), checked against the manifest being
+    extended on the base and on every rebase."""
+    maps = (ours, ours_dv or {}, ours_patch or {})
+    touched = {
+        n: set().union(*(m.get(n, {}) for m in maps))
+        for n in set().union(*maps)
     }
 
-    def stamp_table(n: str, t: dict) -> dict:
+    def stamp_table(n, t: dict) -> dict:
         live = _live_buckets(t["buckets"], ours.get(n, {}))
         out = {**t, "buckets": live}
-        # DV + UPDATE-overlay shed/overlay: same contract as the
-        # single-table loop
         dv = dict(t.get("dv") or {})
         patch = dict(t.get("patch") or {})
         for b in ours.get(n, {}):
-            dv.pop(b, None)
-            patch.pop(b, None)
+            dv.pop(b, None)  # a rewritten bucket sheds its DV
+            patch.pop(b, None)  # ...and its UPDATE overlay
         dv.update((ours_dv or {}).get(n, {}))
         patch.update((ours_patch or {}).get(n, {}))
         patch = {b: g for b, g in patch.items() if g is not None}
-        if dv:
-            out["dv"] = dv
-        else:
-            out.pop("dv", None)
-        if patch:
-            out["patch"] = patch
-        else:
-            out.pop("patch", None)
+        for key, m in (("dv", dv), ("patch", patch)):
+            if m:
+                out[key] = m
+            else:
+                out.pop(key, None)
         t_stats = (our_stats or {}).get(n)
         if "bucket_stats" in t or t_stats:
-            # same purge-then-overlay contract as the single-table
-            # loop, per table and per rebase: a rewritten bucket with
-            # no fresh harvest keeps NO stats (conservative read);
-            # overlay-gaining buckets purge too (base stats describe
-            # superseded values)
+            # purge-then-overlay, per table and per rebase: a rewritten
+            # bucket with no fresh harvest keeps NO stats (conservative
+            # read), never the superseded entry; overlay-gaining
+            # buckets purge too (their base stats describe superseded
+            # values and would prune live rows)
             out["bucket_stats"] = _carry_bucket_stats(
                 t,
                 set(ours.get(n, {})) | set((ours_patch or {}).get(n, {})),
@@ -7197,18 +6954,16 @@ def _commit_db_update(
         return out
 
     def stamped(src: dict, seq: int) -> dict:
-        # the (head) snapshot defines the table set AND the top-level
-        # metadata (streams, future keys); our rewritten buckets
-        # overlay its tables — a table the head dropped and we did not
-        # touch simply stays dropped
-        out = {
-            **{k: v for k, v in src.items() if k != "committed_at"},
-            "token": token,
-            "seq": seq,
-            "tables": {
-                n: stamp_table(n, t) for n, t in src["tables"].items()
+        # committed_at is re-stamped at publish; a table the head
+        # dropped and we did not touch simply stays dropped
+        out = _map_entries(
+            {
+                **{k: v for k, v in src.items() if k != "committed_at"},
+                "token": token,
+                "seq": seq,
             },
-        }
+            stamp_table,
+        )
         _apply_extra_meta(out, extra_meta)
         return out
 
@@ -7221,82 +6976,41 @@ def _commit_db_update(
             return new_manifest
         except FileExistsError:
             head_seq, head = _commit_chain_head(path)
-            touched_tables = (
-                set(ours) | set(ours_dv or {}) | set(ours_patch or {})
-            )
-            for name in sorted(touched_tables):
-                buckets = (
-                    set(ours.get(name, {}))
-                    | set((ours_dv or {}).get(name, {}))
-                    | set((ours_patch or {}).get(name, {}))
-                )
-                ht = head["tables"].get(name)
+            for name, buckets in sorted(touched.items()):
+                whose = "the table " if name is None else f"table {name!r} "
+                span = f"(commits up to seq {head_seq})"
+                bt = _entries(base_manifest)[name]
+                ht = _entries(head).get(name)
                 if ht is None:
-                    # an intervening full rewrite dropped this table —
-                    # the transaction's premise is gone, same contract
-                    # as a bucket conflict
                     raise ConcurrentMergeError(
-                        f"{path}: table {name!r} was removed by a full "
-                        f"rewrite (commits up to seq {head_seq}); "
-                        "re-run against the new head"
+                        f"{path}: {whose}was removed by a full rewrite "
+                        f"{span}; re-run against the new head"
                     )
-                if any(
-                    ht["buckets"].get(b) != base_tables[name].get(b)
-                    for b in buckets
+                for key, what in (
+                    ("buckets", "generation(s)"),
+                    ("dv", "deletion vector(s)"),
+                    ("patch", "UPDATE overlay(s)"),
+                ):
+                    hm, bm = ht.get(key) or {}, bt.get(key) or {}
+                    if any(hm.get(b) != bm.get(b) for b in buckets):
+                        raise ConcurrentMergeError(
+                            f"{path}: {what} of {whose}bucket(s) "
+                            f"{sorted(buckets)} changed {span} after this "
+                            "write's snapshot; re-run against the new head"
+                        )
+                if adds_rows and ht.get("constraints") != bt.get(
+                    "constraints"
                 ):
                     raise ConcurrentMergeError(
-                        f"{path}: transaction touching "
-                        f"{sorted(touched_tables)} conflicts on table "
-                        f"{name!r} bucket(s) "
-                        f"{sorted(buckets)} (commits up to seq {head_seq}); "
-                        "re-run against the new head"
-                    )
-                base_t_dv = base_manifest["tables"][name].get("dv") or {}
-                if any(
-                    (ht.get("dv") or {}).get(b) != base_t_dv.get(b)
-                    for b in buckets
-                ):
-                    raise ConcurrentMergeError(
-                        f"{path}: deletion vector(s) on table {name!r} "
-                        f"bucket(s) {sorted(buckets)} changed (commits "
-                        f"up to seq {head_seq}); re-run against the "
-                        "new head"
-                    )
-                base_t_patch = (
-                    base_manifest["tables"][name].get("patch") or {}
-                )
-                if any(
-                    (ht.get("patch") or {}).get(b) != base_t_patch.get(b)
-                    for b in buckets
-                ):
-                    raise ConcurrentMergeError(
-                        f"{path}: UPDATE overlay(s) on table {name!r} "
-                        f"bucket(s) {sorted(buckets)} changed (commits "
-                        f"up to seq {head_seq}); re-run against the "
-                        "new head"
-                    )
-                if adds_rows and ht.get("constraints") != base_manifest[
-                    "tables"
-                ][name].get("constraints"):
-                    # same constraint-change conflict rule as the
-                    # single-table loop: this transaction's rows were
-                    # validated against the snapshot's constraints only
-                    raise ConcurrentMergeError(
-                        f"{path}: table {name!r}'s CHECK constraint set "
-                        f"changed (commits up to seq {head_seq}) after "
-                        "this transaction validated its rows; re-run "
+                        f"{path}: the CHECK constraint set of {whose}"
+                        f"changed {span} after this write validated its "
+                        "rows against its snapshot's constraints; re-run "
                         "against the new head"
                     )
-                if ht.get("column_map") != base_manifest["tables"][
-                    name
-                ].get("column_map"):
-                    # same RENAME conflict rule as the single-table
-                    # loop: stats and expressions used the snapshot's
-                    # logical names
+                if ht.get("column_map") != bt.get("column_map"):
                     raise ConcurrentMergeError(
-                        f"{path}: table {name!r} had a column renamed "
-                        f"(commits up to seq {head_seq}) after this "
-                        "transaction's snapshot; re-run against the "
+                        f"{path}: a column of {whose}was renamed {span} "
+                        "after this write's snapshot; re-run against the "
                         "new head"
                     )
             seq = head_seq + 1

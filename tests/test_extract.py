@@ -177,21 +177,41 @@ def test_descendent_chain_three_levels(spark, sf_dir):
 def test_self_closure_parent_cycle_falls_back_to_bfs(spark):
     """Pointer doubling cannot converge on a parent cycle; the closure
     must detect that and fall back to BFS, still returning the full
-    mutually-reachable set."""
-    rows = [
-        ("a", "b"),  # a <-> b cycle
-        ("b", "a"),
-        ("c", "a"),  # child of the cycle
-        ("x", None),  # unrelated tree
-        ("y", "x"),
+    mutually-reachable set — for a 2-cycle and for an odd (3-)cycle,
+    which never stops moving under doubling."""
+    cases = [
+        (
+            [
+                ("a", "b"),  # a <-> b cycle
+                ("b", "a"),
+                ("c", "a"),  # child of the cycle
+                ("x", None),  # unrelated tree
+                ("y", "x"),
+            ],
+            "c",
+            {"a", "b", "c"},
+        ),
+        (
+            [
+                ("a", "c"),  # a -> c -> b -> a: a 3-cycle
+                ("b", "a"),
+                ("c", "b"),
+                ("d", "a"),  # child of the cycle
+                ("x", None),  # unrelated tree
+                ("y", "x"),
+            ],
+            "d",
+            {"a", "b", "c", "d"},
+        ),
     ]
-    df = spark.createDataFrame(rows, "Id: string, ParentId: string")
-    cat = TableCatalog(spark, "/tmp/none")
-    cat.register("Account", df)
     reg = SchemaRegistry([TableMeta("Account", lookups={"ParentId": ["Account"]})])
-    steps = [ExtractStepPlan("Account", ExtractScope.SELECTED_IDS, ids=["c"])]
-    res = ExtractOperation(spark, cat, reg, steps).run()
-    assert {r.Id for r in res["Account"].collect()} == {"a", "b", "c"}
+    for rows, seed, want in cases:
+        df = spark.createDataFrame(rows, "Id: string, ParentId: string")
+        cat = TableCatalog(spark, "/tmp/none")
+        cat.register("Account", df)
+        steps = [ExtractStepPlan("Account", ExtractScope.SELECTED_IDS, ids=[seed])]
+        res = ExtractOperation(spark, cat, reg, steps).run()
+        assert {r.Id for r in res["Account"].collect()} == want, seed
 
 
 def test_extract_query_filter_pushed_to_scan(spark, sf_dir):

@@ -2010,6 +2010,32 @@ def test_delete_from_versioned(spark, tmp_path):
     assert read_versioned_table(spark, path, m2["token"]).count() > 0
 
 
+def test_merge_rejects_a_key_other_than_the_table_key(spark, tmp_path):
+    """MERGE buckets its update rows by its ``pk`` argument; a column
+    other than the manifest's key would route rows to the wrong
+    buckets, so it raises (as DELETE does) and commits nothing."""
+    import pytest as _pytest
+
+    from amaxa_spark.sources.catalog import (
+        _bucket_manifest,
+        merge_into_versioned,
+        read_versioned_table,
+        write_versioned_table,
+    )
+
+    path = str(tmp_path / "vt_merge_key")
+    base = spark.range(20).select(
+        F.col("id").alias("pk"), (F.col("id") + 100).alias("alt"),
+        F.lit("v").alias("v"),
+    )
+    m0 = write_versioned_table(base, path, pk="pk", n_buckets=4)
+    upd = spark.createDataFrame([(105, "X")], "alt long, v string")
+    with _pytest.raises(ValueError, match="merge key 'alt' is not the table key"):
+        merge_into_versioned(spark, path, upd, pk="alt", set_cols=["v"])
+    assert _bucket_manifest(path)["token"] == m0["token"]
+    assert {r.v for r in read_versioned_table(spark, path).collect()} == {"v"}
+
+
 def test_apply_changes_replication(spark, tmp_path):
     """CDC replication: diff(src) applied to a replica (with a
     DIFFERENT bucket count) reproduces the source state exactly, in

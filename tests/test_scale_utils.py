@@ -146,6 +146,32 @@ def test_pointer_seed_hits_downward_closure(spark):
     assert "a" in got3 and got3 <= {"a", "b", "c", "d"}
 
 
+def test_pointer_roots_stops_at_round_bound_on_odd_cycle(spark, monkeypatch):
+    # a 3-cycle never stabilizes under doubling: pointer_roots must
+    # give up after ceil(log2 n) + 2 rounds, not its 40-round ceiling,
+    # and report non-convergence so the caller falls back to BFS
+    import math
+
+    from amaxa_spark.operators import graph
+
+    cyc3 = spark.createDataFrame(
+        [("a", "c"), ("b", "a"), ("c", "b"), ("d", "c")],
+        "node: string, parent: string",
+    )
+    checkpoints = []
+    real = graph.observed_checkpoint
+
+    def counting(df, *metrics):
+        checkpoints.append(1)
+        return real(df, *metrics)
+
+    monkeypatch.setattr(graph, "observed_checkpoint", counting)
+    _, converged = graph.pointer_roots(cyc3)
+    assert not converged
+    # one checkpoint sizes the pointer frame, then one per round
+    assert len(checkpoints) - 1 == math.ceil(math.log2(4)) + 2
+
+
 def test_canon_stream_order_independent_and_sensitive():
     # the --stream comparator must be a pure multiset hash: invariant
     # under row order, sensitive to any value change, and aligned with

@@ -26,7 +26,7 @@ from amaxa_spark.sources.catalog import (
     stats_prune_buckets,
     write_versioned_table,
     _bucket_manifest,
-    _commit_bucket_update,
+    _commit_db_update,
     _publish_manifest,
 )
 
@@ -201,9 +201,7 @@ def test_stale_stats_impossible_without_harvest(spark, tmp_path):
                        f"{MERGE_BUCKET_COL}={victim}")
     dst = os.path.join(path, gen, f"{MERGE_BUCKET_COL}={victim}")
     shutil.copytree(src, dst)
-    mf1 = _commit_bucket_update(
-        path, mf0, dict(mf0["buckets"]), {victim: gen}, "rawcommit0001"
-    )
+    mf1 = _commit_db_update(path, mf0, {None: {victim: gen}}, "rawcommit0001")
     _publish_manifest(path, mf1)
     assert victim not in mf1["bucket_stats"]
     # the un-harvested bucket is now always read (conservative)
@@ -925,9 +923,7 @@ def test_bloom_all_null_and_metadata_stats(spark, tmp_path):
                        f"{MERGE_BUCKET_COL}={victim}")
     shutil.copytree(src, os.path.join(path, gen,
                                       f"{MERGE_BUCKET_COL}={victim}"))
-    mf2 = _commit_bucket_update(
-        path, mf, dict(mf["buckets"]), {victim: gen}, "rawstat0001"
-    )
+    mf2 = _commit_db_update(path, mf, {None: {victim: gen}}, "rawstat0001")
     _publish_manifest(path, mf2)
     st2 = versioned_table_stats(path)
     assert st2["rows"] is None and st2["cols"] == {"v": None}

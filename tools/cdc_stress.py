@@ -1,9 +1,13 @@
 """Multi-process stress for the CDC/DELETE surface of the versioned
-layout — the cas_stress.py sibling for the round-7 write paths that
-until now had only in-process tests: `merge_into_versioned`,
-`delete_from_versioned`, and `apply_changes_versioned` racing on ONE
-table from SEPARATE OS processes (each with its own SparkSession/JVM,
-so nothing is serialized by a shared driver lock).
+layouts — the cas_stress.py sibling for the write paths that
+otherwise have only in-process tests: MERGE, DELETE, UPDATE and
+CDC-apply racing on ONE table from SEPARATE OS processes (each with
+its own SparkSession/JVM, so nothing is serialized by a shared driver
+lock). The race runs once per storage layout: the ``table`` leg calls
+the single-table verbs (`merge_into_versioned`, ...), the ``db`` leg
+their `*_db` twins, each op a one-table transaction on table ``t`` of
+a database that also holds an untouched sibling table (which must read
+back unchanged). Both legs commit through the same CAS loop.
 
 Each worker owns a DISJOINT key range and interleaves the three op
 kinds over it, retrying `ConcurrentMergeError` rebases like a real
@@ -19,10 +23,16 @@ asserts the protocol's whole contract:
   worker's independently-tracked expected dict,
 - replica equality: a fresh replica seeded from the PRE-chaos
   snapshot and fed the computed change feed (`diff_versioned`
-  init→head, applied via `apply_changes_versioned`) hash-matches the
-  head — i.e. the CDF of a heavily contended history is replayable.
+  init→head, applied via `apply_changes_versioned`, or their db
+  twins) hash-matches the head — i.e. the CDF of a heavily contended
+  history is replayable.
+
+The table leg also races partition evolution (`rebucket_versioned`,
+which has no db twin); both legs race chain compaction.
 
 Usage: python tools/cdc_stress.py [n_procs] [ops_per_proc]
+(default: 3 12); both legs always run. Each worker JVM takes
+AMAXA_SPARK_DRIVER_MEM (default 4g) of driver heap.
 """
 
 from __future__ import annotations
@@ -37,20 +47,54 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEYS_PER_WORKER = 60
+DB_TABLE = "t"
 
 
-def worker(path: str, wid: int, n_ops: int, outdir: str) -> None:
+def dml_verbs(layout: str) -> dict:
+    """The four raced verbs of one layout, each with the single-table
+    argument shape; on the db layout each call is a one-table
+    transaction on ``DB_TABLE``."""
+    from amaxa_spark.sources import catalog as C
+
+    t = DB_TABLE
+    if layout == "db":
+        return {
+            "merge": lambda spark, path, upd: C.merge_into_versioned_db(
+                spark, path, {t: upd}, {t: ["v"]}, not_matched="insert"
+            ),
+            "delete": lambda spark, path, keys, mode: C.delete_from_versioned_db(
+                spark, path, {t: keys}, mode=mode
+            ),
+            "update": lambda spark, path, sets, where, mode: C.update_versioned_db(
+                spark, path, {t: {"set": sets, "where": where}}, mode=mode
+            ),
+            "apply": lambda spark, path, feed: C.apply_changes_versioned_db(
+                spark, path, {t: feed}
+            ),
+        }
+    return {
+        "merge": lambda spark, path, upd: C.merge_into_versioned(
+            spark, path, upd, pk="pk", set_cols=["v"], not_matched="insert"
+        ),
+        "delete": lambda spark, path, keys, mode: C.delete_from_versioned(
+            spark, path, keys, pk="pk", mode=mode
+        ),
+        "update": lambda spark, path, sets, where, mode: C.update_versioned(
+            spark, path, sets, where=where, mode=mode
+        ),
+        "apply": lambda spark, path, feed: C.apply_changes_versioned(
+            spark, path, feed
+        ),
+    }
+
+
+def worker(path: str, layout: str, wid: int, n_ops: int, outdir: str) -> None:
     os.environ.setdefault("AMAXA_SPARK_DRIVER_MEM", "4g")
     from amaxa_spark.session import get_spark
-    from amaxa_spark.sources.catalog import (
-        ConcurrentMergeError,
-        apply_changes_versioned,
-        delete_from_versioned,
-        merge_into_versioned,
-        update_versioned,
-    )
+    from amaxa_spark.sources.catalog import ConcurrentMergeError
 
-    spark = get_spark(f"cdc_stress_w{wid}", cpus=4)
+    verbs = dml_verbs(layout)
+    spark = get_spark(f"cdc_stress_{layout}_w{wid}", cpus=4)
     base = wid * 1000
     # the worker's model of its own keys: pk -> v, mirrored op by op
     model = {base + k: f"init{base + k}" for k in range(KEYS_PER_WORKER)}
@@ -68,10 +112,9 @@ def worker(path: str, wid: int, n_ops: int, outdir: str) -> None:
             umode = "dv" if (i // 4) % 2 else "rewrite"
             while True:
                 try:
-                    update_versioned(
+                    verbs["update"](
                         spark, path, {"v": F.lit(f"w{wid}u{i}")},
-                        where=f"pk >= {lo} AND pk < {lo + 10}",
-                        mode=umode,
+                        f"pk >= {lo} AND pk < {lo + 10}", umode,
                     )
                     break
                 except ConcurrentMergeError:
@@ -87,10 +130,7 @@ def worker(path: str, wid: int, n_ops: int, outdir: str) -> None:
             upd = spark.createDataFrame(rows, "pk long, v string")
             while True:
                 try:
-                    merge_into_versioned(
-                        spark, path, upd, pk="pk", set_cols=["v"],
-                        not_matched="insert",
-                    )
+                    verbs["merge"](spark, path, upd)
                     break
                 except ConcurrentMergeError:
                     retries += 1
@@ -106,7 +146,7 @@ def worker(path: str, wid: int, n_ops: int, outdir: str) -> None:
             dmode = "dv" if (i // 4) % 2 else "rewrite"
             while True:
                 try:
-                    delete_from_versioned(spark, path, kf, pk="pk", mode=dmode)
+                    verbs["delete"](spark, path, kf, dmode)
                     break
                 except ConcurrentMergeError:
                     retries += 1
@@ -127,7 +167,7 @@ def worker(path: str, wid: int, n_ops: int, outdir: str) -> None:
             )
             while True:
                 try:
-                    apply_changes_versioned(spark, path, feed)
+                    verbs["apply"](spark, path, feed)
                     break
                 except ConcurrentMergeError:
                     retries += 1
@@ -196,45 +236,48 @@ def fold_worker(path: str, attempts: int, outdir: str) -> None:
         json.dump({"folds": folds, "skips": skips}, f)
 
 
-def main() -> None:
-    n_procs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    n_ops = int(sys.argv[2]) if len(sys.argv) > 2 else 12
-    os.environ.setdefault("AMAXA_SPARK_DRIVER_MEM", "4g")
-    from amaxa_spark.session import get_spark
-    from amaxa_spark.sources.catalog import (
-        COMMITS_DIR,
-        MERGE_BUCKET_COL,
-        apply_changes_versioned,
-        diff_versioned,
-        read_versioned_table,
-        write_versioned_table,
-    )
+def run_leg(spark, layout: str, n_procs: int, n_ops: int) -> dict:
+    """Race the workers on one layout and check the whole contract;
+    returns the leg's summary."""
+    from amaxa_spark.sources import catalog as C
 
-    tmp = tempfile.mkdtemp(prefix="cdc_stress_")
+    db = layout == "db"
+    tmp = tempfile.mkdtemp(prefix=f"cdc_stress_{layout}_")
     path = os.path.join(tmp, "src")
     replica = os.path.join(tmp, "replica")
-    spark = get_spark("cdc_stress_driver", cpus=8)
     rows = [
         (w * 1000 + k, f"init{w * 1000 + k}")
         for w in range(n_procs)
         for k in range(KEYS_PER_WORKER)
     ]
     base = spark.createDataFrame(rows, "pk long, v string")
-    m0 = write_versioned_table(base, path, pk="pk", n_buckets=16)
-    # replica starts at the pre-chaos snapshot, DIFFERENT bucket count
-    write_versioned_table(base, replica, pk="pk", n_buckets=5)
+    side_rows = [(k, f"side{k}") for k in range(20)]
+    if db:
+        side = spark.createDataFrame(side_rows, "pk long, v string")
+        m0 = C.write_versioned_db(
+            spark, path, {DB_TABLE: base, "side": side},
+            {DB_TABLE: "pk", "side": "pk"}, n_buckets=16,
+        )
+        # replica starts at the pre-chaos snapshot, DIFFERENT bucket count
+        C.write_versioned_db(
+            spark, replica, {DB_TABLE: base}, {DB_TABLE: "pk"}, n_buckets=5
+        )
+    else:
+        m0 = C.write_versioned_table(base, path, pk="pk", n_buckets=16)
+        C.write_versioned_table(base, replica, pk="pk", n_buckets=5)
 
     ctx = mp.get_context("spawn")  # no forked JVM state
     procs = [
-        ctx.Process(target=worker, args=(path, w, n_ops, tmp))
+        ctx.Process(target=worker, args=(path, layout, w, n_ops, tmp))
         for w in range(n_procs)
     ]
-    # one extra process races PARTITION EVOLUTION against the DML —
-    # a successful rebucket must carry every committed row; a losing
-    # one must raise, never silently supersede (round-10 detection)
-    procs.append(
-        ctx.Process(target=rebucket_worker, args=(path, 6, tmp))
-    )
+    if not db:
+        # one extra process races PARTITION EVOLUTION against the DML
+        # — a successful rebucket must carry every committed row; a
+        # losing one must raise, never silently supersede
+        procs.append(
+            ctx.Process(target=rebucket_worker, args=(path, 6, tmp))
+        )
     # and one keeps folding the chain prefix into checkpoint commits
     # while everyone writes — reads, rebases, and the final CDF replay
     # must be unaffected (the FLOOR protocol's live-fire test)
@@ -250,36 +293,44 @@ def main() -> None:
     dead = [p.pid for p in procs if p.exitcode != 0]
     assert not dead, f"worker process(es) died: {dead}"
 
-    with open(os.path.join(tmp, "rebucket.json")) as f:
-        rb = json.load(f)
-
-    # a guaranteed-quiet final rebucket: post-evolution reads must
-    # equal the pre-evolution state exactly (checked below via the
-    # same expected-union and replica-CDF asserts)
-    from amaxa_spark.sources.catalog import rebucket_versioned
-
-    final_m = rebucket_versioned(spark, path, 32)
-    assert final_m["n_buckets"] == 32
+    out = {"layout": layout}
+    if not db:
+        with open(os.path.join(tmp, "rebucket.json")) as f:
+            rb = json.load(f)
+        # a guaranteed-quiet final rebucket: post-evolution reads must
+        # equal the pre-evolution state exactly (checked below via the
+        # same expected-union and replica-CDF asserts)
+        final_m = C.rebucket_versioned(spark, path, 32)
+        assert final_m["n_buckets"] == 32
+        out.update({
+            "rebuckets_landed": rb["landed"],
+            "rebucket_conflicts": rb["conflicts"],
+            "final_n_buckets": final_m["n_buckets"],
+            "post_rebucket_read_equal": True,
+        })
 
     # --- chain integrity (floor-aware: folding deletes the prefix
     # below FLOOR; above it the chain must stay dense) ---
-    from amaxa_spark.sources.catalog import _chain_floor
-
     seqs = sorted(
         int(f[: -len(".json")])
-        for f in os.listdir(os.path.join(path, COMMITS_DIR))
+        for f in os.listdir(os.path.join(path, C.COMMITS_DIR))
         if f.endswith(".json")
     )
-    floor = _chain_floor(path) or 0
+    floor = C._chain_floor(path) or 0
     assert seqs == list(range(floor, floor + len(seqs))), (
         f"chain has holes above floor {floor}: {seqs[:10]}..."
     )
-    head = read_versioned_table(spark, path)
-    from amaxa_spark.sources.catalog import _bucket_manifest
-
-    manifest = _bucket_manifest(path)
-    for b, gen in manifest["buckets"].items():
-        leaf = os.path.join(path, gen, f"{MERGE_BUCKET_COL}={b}")
+    if db:
+        manifest = C._db_manifest(path)
+        entry = manifest["tables"][DB_TABLE]
+        root = os.path.join(path, DB_TABLE)
+        head = C.read_versioned_db(spark, path, DB_TABLE)
+    else:
+        manifest = entry = C._bucket_manifest(path)
+        root = path
+        head = C.read_versioned_table(spark, path)
+    for b, gen in entry["buckets"].items():
+        leaf = os.path.join(root, gen, f"{C.MERGE_BUCKET_COL}={b}")
         assert os.path.isdir(leaf), f"missing bucket dir {leaf}"
 
     # --- state correctness vs the union of worker models ---
@@ -300,34 +351,53 @@ def main() -> None:
     )
 
     # --- replica equality via the computed CDF of the whole chaos ---
-    feed = diff_versioned(spark, path, m0["token"], manifest["token"])
-    apply_changes_versioned(spark, replica, feed)
-    want = sorted(got.items())
-    have = sorted(
-        (r.pk, r.v)
-        for r in read_versioned_table(spark, replica)
-        .select("pk", "v")
-        .collect()
+    if db:
+        feed = C.diff_versioned_db(
+            spark, path, DB_TABLE, m0["token"], manifest["token"]
+        )
+        C.apply_changes_versioned_db(spark, replica, {DB_TABLE: feed})
+        rep = C.read_versioned_db(spark, replica, DB_TABLE)
+        # the sibling table no transaction touched reads back unchanged
+        side_now = sorted(
+            (r.pk, r.v)
+            for r in C.read_versioned_db(spark, path, "side").collect()
+        )
+        assert side_now == side_rows, "untouched sibling table changed"
+        out["sibling_unchanged"] = True
+    else:
+        feed = C.diff_versioned(spark, path, m0["token"], manifest["token"])
+        C.apply_changes_versioned(spark, replica, feed)
+        rep = C.read_versioned_table(spark, replica)
+    have = sorted((r.pk, r.v) for r in rep.select("pk", "v").collect())
+    assert have == sorted(got.items()), (
+        "replica diverged from source after CDF apply"
     )
-    assert have == want, "replica diverged from source after CDF apply"
 
     with open(os.path.join(tmp, "fold.json")) as f:
         fold = json.load(f)
 
-    n_commits = seqs[-1]  # head seq == total commits after the init
-    print(json.dumps({
+    out.update({
         "procs": n_procs, "ops_per_proc": n_ops,
-        "commits": n_commits, "wall_s": round(wall, 1),
+        # head seq == total commits after the init
+        "commits": seqs[-1], "wall_s": round(wall, 1),
         "chain_files": len(seqs), "chain_floor": floor,
         "folds_landed": fold["folds"],
         "rebase_retries": retries,
-        "rebuckets_landed": rb["landed"],
-        "rebucket_conflicts": rb["conflicts"],
-        "final_n_buckets": final_m["n_buckets"],
         "final_rows": len(got),
         "chain_dense": True, "state_exact": True, "replica_equal": True,
-        "post_rebucket_read_equal": True,
-    }))
+    })
+    return out
+
+
+def main() -> None:
+    n_procs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    n_ops = int(sys.argv[2]) if len(sys.argv) > 2 else 12
+    os.environ.setdefault("AMAXA_SPARK_DRIVER_MEM", "4g")
+    from amaxa_spark.session import get_spark
+
+    spark = get_spark("cdc_stress_driver", cpus=8)
+    for layout in ("table", "db"):
+        print(json.dumps(run_leg(spark, layout, n_procs, n_ops)), flush=True)
     spark.stop()
 
 
